@@ -15,8 +15,11 @@ projection over the corpus:
 3. the combination decides which violations survive and whether to add a
    combination-level header violation.
 
-No shuffle, no UDF: the plan is a single whole-stage-codegen'd Project.
-At 100 TB this layer is scan-bound — exactly what you want.
+No shuffle and no Python UDF: the plan is a single Project. Doc rules
+are scalar expressions and whole-stage codegen compiles them; span rules
+run inside one fused ``transform`` per spans column, and higher-order
+functions are ``CodegenFallback``, so that part of the Project runs
+interpreted.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from json_validator_spark.rules.compiler import (
-    VIOLATION_ARRAY_TYPE,
+    PlanConstants,
     compile_rule,
     normalize_rule,
     span_violation_expr,
@@ -38,7 +41,8 @@ from json_validator_spark.rules.model import Combination, Rule, RuleSet, RuleSet
 def _branch_violations(
     rules: list[Rule],
     definitions: dict[str, dict[str, Any]] | None,
-    detail: bool = False,
+    detail: bool,
+    consts: PlanConstants,
 ) -> Column:
     """All of one branch's violations as ONE array Column.
 
@@ -65,7 +69,7 @@ def _branch_violations(
         # on parameter count, so the callable must be exactly (s, i)
         def per_span(s: Column, i: Column) -> Column:
             return F.array_compact(
-                F.array(*[span_violation_expr(r, s, i, detail) for r in group])
+                F.array(*[span_violation_expr(r, s, i, detail, consts) for r in group])
             )
 
         return per_span
@@ -77,19 +81,18 @@ def _branch_violations(
             F.when(
                 F.col(spans_col).isNotNull(),
                 F.flatten(F.transform(F.col(spans_col), per_span)),
-            ).otherwise(F.array().cast(VIOLATION_ARRAY_TYPE))
+            ).otherwise(consts.empty_array)
         )
     arrays.extend(
-        compile_rule(r, detail=detail).violations()
+        compile_rule(r, detail=detail, consts=consts).violations()
         for r in norm if r.level == "doc"
     )
-    return _concat_arrays(arrays)
+    return _concat_arrays(arrays, consts)
 
-def _concat_arrays(arrays: list[Column]) -> Column:
+def _concat_arrays(arrays: list[Column], consts: PlanConstants) -> Column:
     if not arrays:
-        return F.array().cast(VIOLATION_ARRAY_TYPE)
-    out = F.concat(*[F.coalesce(a, F.array().cast(VIOLATION_ARRAY_TYPE)) for a in arrays])
-    return out
+        return consts.empty_array
+    return F.concat(*[F.coalesce(a, consts.empty_array) for a in arrays])
 
 
 def _header(rule_id: str, message: str) -> Column:
@@ -117,8 +120,9 @@ def _tag_branch(arr: Column, branch_idx: int) -> Column:
 
 def _combine(
     ruleset: RuleSet,
-    definitions: dict[str, dict[str, Any]] | None = None,
-    detail: bool = False,
+    definitions: dict[str, dict[str, Any]] | None,
+    detail: bool,
+    consts: PlanConstants,
 ) -> tuple[Column, Column, Column]:
     """One rule set's combination algebra → ``(final violations array,
     doc_pass, n_branches_passed)`` Columns."""
@@ -133,7 +137,7 @@ def _combine(
     branch_viols: list[Column] = []
     branch_pass: list[Column] = []
     for b in branches:
-        viols = _branch_violations(ruleset.branch(b), definitions, detail)
+        viols = _branch_violations(ruleset.branch(b), definitions, detail, consts)
         branch_viols.append(viols)
         branch_pass.append(
             F.size(F.filter(viols, lambda v: v["severity"] == "error")) == 0
@@ -144,7 +148,7 @@ def _combine(
 
     if combo == Combination.ALL or len(branches) == 1:
         # every branch must pass; violations are the union (JSONValidator.java:254-258)
-        final = _concat_arrays(branch_viols)
+        final = _concat_arrays(branch_viols, consts)
         doc_pass = F.lit(True)
         for p in branch_pass:
             doc_pass = doc_pass & p
@@ -155,19 +159,19 @@ def _combine(
         for p in branch_pass:
             any_pass = any_pass | p
         tagged = _concat_arrays(
-            [_tag_branch(v, i) for i, v in enumerate(branch_viols)]
+            [_tag_branch(v, i) for i, v in enumerate(branch_viols)], consts
         )
         failure = F.concat(
             F.array(_header("combination.any", "content does not match any of the configured schemas")),
             tagged,
         )
-        final = F.when(any_pass, F.array().cast(VIOLATION_ARRAY_TYPE)).otherwise(failure)
+        final = F.when(any_pass, consts.empty_array).otherwise(failure)
         doc_pass = any_pass
     elif combo == Combination.ONE_OF:
         # exactly one must pass; 0 ⇒ all branch errors + header; >1 ⇒ a
         # count violation (JSONValidator.java:259-278, validator_en.properties:17,21)
         tagged = _concat_arrays(
-            [_tag_branch(v, i) for i, v in enumerate(branch_viols)]
+            [_tag_branch(v, i) for i, v in enumerate(branch_viols)], consts
         )
         zero_case = F.concat(
             F.array(_header("combination.oneOf", "content does not match any of the configured schemas")),
@@ -177,7 +181,7 @@ def _combine(
             _header("combination.oneOf.multiple", "content matches more than one configured schema")
         )
         final = (
-            F.when(n_passed == 1, F.array().cast(VIOLATION_ARRAY_TYPE))
+            F.when(n_passed == 1, consts.empty_array)
             .when(n_passed == 0, zero_case)
             .otherwise(multi_case)
         )
@@ -202,20 +206,21 @@ def with_violations(
     ALL/ANY/ONE_OF algebra; ``n_branches_passed`` then counts passing
     GROUPS. Still one projection — the group conjunction is plain
     boolean algebra over the same narrow pass."""
+    consts = PlanConstants()
     if isinstance(ruleset, RuleSetGroup):
         finals: list[Column] = []
         passes: list[Column] = []
         for g in ruleset.groups:
-            f_g, p_g, _ = _combine(g, definitions, detail)
+            f_g, p_g, _ = _combine(g, definitions, detail, consts)
             finals.append(f_g)
             passes.append(p_g)
-        final = _concat_arrays(finals)
+        final = _concat_arrays(finals, consts)
         doc_pass = passes[0]
         for p in passes[1:]:
             doc_pass = doc_pass & p
         n_passed = sum((p.cast("int") for p in passes), start=F.lit(0))
     else:
-        final, doc_pass, n_passed = _combine(ruleset, definitions, detail)
+        final, doc_pass, n_passed = _combine(ruleset, definitions, detail, consts)
 
     return df.withColumns(
         {

@@ -10,6 +10,7 @@ set checks (uniqueness groupBy + broadcast referential + single stats agg)
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,7 +23,7 @@ from json_validator_spark.rules.model import RuleSet, RuleSetGroup
 from json_validator_spark.session import size_shuffle_for
 
 
-def salted_repartition(df: DataFrame, n: int, key: str = "doc_id", salt_buckets: int = 16) -> DataFrame:
+def salted_repartition(df: DataFrame, n: int, key: str = "doc_id") -> DataFrame:
     """Explicit skew-spreading repartition (SURVEY §4.3.1).
 
     Media-heavy documents (100-1000 spans vs a 1-10 median) cluster in
@@ -37,20 +38,14 @@ def salted_repartition(df: DataFrame, n: int, key: str = "doc_id", salt_buckets:
     carried such a salt column and it was dead computation).
     Deterministic — a pure function of the key — so N-vs-4N runs see
     identical row→partition *groups* (partition count differs, content
-    hashes don't). ``salt_buckets`` is retained for API compatibility."""
+    hashes don't)."""
     return df.repartition(n, F.xxhash64(F.col(key)))
 
 
 @dataclass
 class RunResult:
     violations: DataFrame      # (doc_id, span_path, rule_id, severity, message)
-    doc_verdicts: DataFrame    # (doc_id, n_errors, n_warnings, result) — row rules only, no join
-    partition_verdicts: DataFrame
-    aggregate: DataFrame       # (rule_id, severity, count)
     stats: DataFrame | None    # column_stats output
-    # row rules ∪ uniqueness ∪ referential ∪ plugins — the reference's
-    # merged-TAR counter semantics (lazy; costs a join only if used)
-    doc_verdicts_merged: DataFrame | None = None
     # ONE-ACTION run metrics: (n_violations, n_errors, n_warnings,
     # n_failing_partitions) over the merged stream. Collecting this is
     # ONE evaluation of the whole pipeline; collecting violations.count()
@@ -58,8 +53,39 @@ class RunResult:
     # projection once per action (Spark shares no work between actions
     # without an explicit persist, which costs more than it saves here —
     # measured: 7.2s two-action vs 4.0s single-action on a 1M-doc corpus).
-    metrics: DataFrame | None = None
+    metrics: DataFrame
+    # what the report frames below are built from: the scanned (and
+    # possibly repartitioned) docs and their with_violations projection
+    docs: DataFrame
+    with_viols: DataFrame
+    doc_id: str = "doc_id"
     extras: dict[str, Any] = field(default_factory=dict)
+
+    # Report frames are built on first access and then kept: building and
+    # analysing all four cost ~300 py4j round trips per run, and the
+    # metrics-only caller (the bench op) and the checkpoint protocol
+    # (violations only) never read them.
+
+    @cached_property
+    def doc_verdicts(self) -> DataFrame:
+        """(doc_id, n_errors, n_warnings, result) — row rules only, no join."""
+        return rpt.doc_verdicts(self.with_viols, doc_id=self.doc_id)
+
+    @cached_property
+    def partition_verdicts(self) -> DataFrame:
+        return rpt.partition_verdicts(self.with_viols)
+
+    @cached_property
+    def aggregate(self) -> DataFrame:
+        """(rule_id, severity, count)."""
+        return rpt.aggregate_report(self.violations)
+
+    @cached_property
+    def doc_verdicts_merged(self) -> DataFrame:
+        """Row rules ∪ uniqueness ∪ referential ∪ plugins — the
+        reference's merged-TAR counter semantics (costs a join only when
+        an action uses it)."""
+        return rpt.doc_verdicts_merged(self.docs, self.violations, doc_id=self.doc_id)
 
 
 def validate_run(
@@ -162,10 +188,9 @@ def validate_run(
 
     return RunResult(
         violations=violations,
-        doc_verdicts=rpt.doc_verdicts(wv, doc_id=doc_id),
-        partition_verdicts=rpt.partition_verdicts(wv),
-        aggregate=rpt.aggregate_report(violations),
         stats=stats,
-        doc_verdicts_merged=rpt.doc_verdicts_merged(docs, violations, doc_id=doc_id),
         metrics=metrics,
+        docs=docs,
+        with_viols=wv,
+        doc_id=doc_id,
     )

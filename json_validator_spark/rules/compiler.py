@@ -6,8 +6,11 @@ The analogue of the reference's schema parsing + keyword interpretation
 Column expression of type ``array<struct<span_path,rule_id,severity,
 message>>`` — the per-row violations that rule produces. The pipeline
 concatenates these arrays and explodes once, so the entire row-rule layer
-is a single narrow, whole-stage-codegen'd projection with zero shuffles
-and zero Python in the hot path.
+is a single narrow projection with zero shuffles and zero Python in the
+hot path. Doc rules are scalar expressions; span rules compile to
+``span_violation_expr`` inside one fused ``transform`` per spans column
+(``operators/row_checks._branch_violations``), and higher-order functions
+are ``CodegenFallback``, so that part of the projection runs interpreted.
 
 ``$ref`` resolution inlines named definitions with a cycle guard,
 mirroring ``SchemaResolutionState.java:30-56``.
@@ -16,6 +19,7 @@ mirroring ``SchemaResolutionState.java:30-56``.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Any, Callable
 
 from pyspark.sql import Column
@@ -26,6 +30,27 @@ from json_validator_spark.rules.vocabulary import PRESENCE_KINDS, build_pass
 
 VIOLATION_FIELDS = "span_path string, rule_id string, severity string, message string"
 VIOLATION_ARRAY_TYPE = f"array<struct<{VIOLATION_FIELDS}>>"
+
+
+class PlanConstants:
+    """Violation-typed constants shared by every rule of one
+    ``with_violations`` call. Each ``F.*`` call is a py4j round trip and
+    Catalyst expressions are immutable, so one Column serves every use;
+    a fresh instance per call, because Columns belong to the session
+    that was active when they were built."""
+
+    @cached_property
+    def empty_array(self) -> Column:
+        return F.array().cast(VIOLATION_ARRAY_TYPE)
+
+    @cached_property
+    def null_array(self) -> Column:
+        return F.lit(None).cast(VIOLATION_ARRAY_TYPE)
+
+    @cached_property
+    def null_struct(self) -> Column:
+        return F.lit(None).cast(f"struct<{VIOLATION_FIELDS}>")
+
 
 def _message(rule: Rule) -> str:
     """Static per-rule message from the locale-keyed catalog
@@ -211,11 +236,20 @@ def compile_rule(
     rule: Rule,
     definitions: dict[str, dict[str, Any]] | None = None,
     detail: bool = False,
+    consts: PlanConstants | None = None,
 ) -> CompiledRule:
-    r = normalize_rule(rule, definitions)
-    if r.level == "span":
-        return _compile_span_rule(r, detail)
-    return _compile_doc_rule(r, detail)
+    """Compile one DOC-level rule. Span rules have no per-rule form: they
+    are evaluated together, one fused ``transform`` per spans column, by
+    ``operators.row_checks.with_violations``."""
+    if rule.level == "span":
+        raise ValueError(
+            f"rule {rule.rule_id!r}: span-level target {rule.target!r} has "
+            "no per-rule compiled form; evaluate span rules through "
+            "operators.row_checks.with_violations"
+        )
+    return _compile_doc_rule(
+        normalize_rule(rule, definitions), detail, consts or PlanConstants()
+    )
 
 
 def _null_wrapped(kind: str, value: Column, params: dict[str, Any]) -> Column:
@@ -249,7 +283,7 @@ def _pointer_value(target: str) -> Column:
     return col
 
 
-def _compile_doc_rule(rule: Rule, detail: bool = False) -> CompiledRule:
+def _compile_doc_rule(rule: Rule, detail: bool, consts: PlanConstants) -> CompiledRule:
     value = _doc_value(rule)
 
     def pass_flag() -> Column:
@@ -273,18 +307,14 @@ def _compile_doc_rule(rule: Rule, detail: bool = False) -> CompiledRule:
             F.lit(rule.severity).alias("severity"),
             _message_col(rule, value, detail).alias("message"),
         )
-        return F.when(~pass_flag(), F.array(v)).otherwise(
-            F.lit(None).cast(VIOLATION_ARRAY_TYPE)
-        )
+        return F.when(~pass_flag(), F.array(v)).otherwise(consts.null_array)
 
     return CompiledRule(rule, violations, pass_flag)
 
 
 def _per_span_ok(rule: Rule, s: Column) -> Column:
-    """Pass predicate for ONE span struct value — used both inside the
-    array lambda (`_compile_span_rule`) and over a posexploded scalar
-    struct column (`span_violation_expr`, the whole-stage-codegen fast
-    path)."""
+    """Pass predicate for ONE span struct value ``s`` — the element
+    variable of the fused per-span lambda (`span_violation_expr`)."""
     fld = rule.span_field
     guard = _span_guard(rule.params)
     if rule.kind == "dependentRequired":
@@ -298,13 +328,13 @@ def _per_span_ok(rule: Rule, s: Column) -> Column:
 
 
 def span_violation_expr(
-    rule: Rule, s: Column, i: Column, detail: bool = False
+    rule: Rule, s: Column, i: Column, detail: bool, consts: PlanConstants
 ) -> Column:
-    """``when(span fails rule, violation struct)`` over an EXPLODED span:
-    ``s`` is the span struct value, ``i`` its position. Pure scalar
-    expressions — stays inside whole-stage codegen, unlike the
-    higher-order-function array path (HOFs are CodegenFallback and run
-    interpreted)."""
+    """``when(span fails rule, violation struct)`` for ONE span: ``s`` is
+    the span struct value, ``i`` its position. Called inside the fused
+    per-span ``transform`` lambda of ``row_checks._branch_violations``,
+    so it runs interpreted (higher-order functions are
+    ``CodegenFallback``)."""
     v = F.struct(
         F.concat(
             F.lit(f"/{rule.column}/"), i.cast("string"), F.lit(f"/{rule.span_field}")
@@ -313,37 +343,5 @@ def span_violation_expr(
         F.lit(rule.severity).alias("severity"),
         _message_col(rule, s[rule.span_field], detail).alias("message"),
     )
-    return F.when(~_per_span_ok(rule, s), v).otherwise(
-        F.lit(None).cast(f"struct<{VIOLATION_FIELDS}>")
-    )
+    return F.when(~_per_span_ok(rule, s), v).otherwise(consts.null_struct)
 
-
-def _compile_span_rule(rule: Rule, detail: bool = False) -> CompiledRule:
-    spans_col = rule.column  # e.g. "spans"
-    fld = rule.span_field
-
-    def per_span_ok(s: Column) -> Column:
-        return _per_span_ok(rule, s)
-
-    def violations() -> Column:
-        def per_elem(s: Column, i: Column) -> Column:
-            v = F.struct(
-                F.concat(
-                    F.lit(f"/{spans_col}/"), i.cast("string"), F.lit(f"/{fld}")
-                ).alias("span_path"),
-                F.lit(rule.rule_id).alias("rule_id"),
-                F.lit(rule.severity).alias("severity"),
-                _message_col(rule, s[fld], detail).alias("message"),
-            )
-            return F.when(~per_span_ok(s), v).otherwise(
-                F.lit(None).cast(f"struct<{VIOLATION_FIELDS}>")
-            )
-
-        return F.filter(
-            F.transform(F.col(spans_col), per_elem), lambda x: x.isNotNull()
-        )
-
-    def pass_flag() -> Column:
-        return F.forall(F.col(spans_col), per_span_ok) | F.col(spans_col).isNull()
-
-    return CompiledRule(rule, violations, pass_flag)

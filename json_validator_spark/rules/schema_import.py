@@ -1267,7 +1267,7 @@ def ruleset_from_json_schema(
                 # spans-shaped `array<struct>` columns of the input
                 # table, or `array<map>`): compile to the engine's
                 # native per-field SPAN rules (`/prop/*/field` — indexed
-                # JSON-pointer locations, `compiler._compile_span_rule`)
+                # JSON-pointer locations, `compiler.span_violation_expr`)
                 # instead of the map-oriented inner-items predicate,
                 # which cannot evaluate struct elements. networknt
                 # reports the same nested paths per element

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from json_validator_spark.corpus import corpus_ruleset
@@ -78,6 +79,83 @@ def test_run_metrics_clean_corpus_zero_counters(spark):
     rs = RuleSet(rules=(Rule("req.s", "/s", "required"),))
     m = validate_run(spark, docs, rs, check_uniqueness=False).metrics.collect()[0]
     assert (m["n_violations"], m["n_errors"], m["n_warnings"], m["n_failing_partitions"]) == (0, 0, 0, 0)
+
+
+def test_report_frames_built_on_first_use(spark, monkeypatch):
+    """A caller that reads only `metrics` builds none of the report
+    frames; a report frame is built once, on first access, and kept."""
+    from json_validator_spark.operators import report as rpt
+
+    builders = ("doc_verdicts", "partition_verdicts", "aggregate_report", "doc_verdicts_merged")
+    calls = dict.fromkeys(builders, 0)
+
+    def counted(name):
+        real = getattr(rpt, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return real(*args, **kwargs)
+
+        return wrapper
+
+    for name in builders:
+        monkeypatch.setattr(rpt, name, counted(name))
+    res = validate_run(
+        spark, synth_documents(spark, 200), corpus_ruleset(),
+        media_catalog=synth_media_catalog(spark),
+    )
+    assert res.metrics.columns[0] == "n_violations"
+    assert all(n == 0 for n in calls.values()), calls
+    assert res.aggregate is res.aggregate
+    assert res.doc_verdicts_merged is res.doc_verdicts_merged
+    assert calls == {**dict.fromkeys(builders, 0), "aggregate_report": 1, "doc_verdicts_merged": 1}
+
+
+def test_validate_run_build_round_trip_budget(spark):
+    """Building the flagship plan stays within 2,600 py4j commands. It
+    took 4,341 on this input with DataFrame-debugging call-site capture on
+    and every report frame built eagerly, and 1,381 with both off. Counted on
+    the building thread only: py4j's finalizer thread sends object-release
+    commands whenever Python's GC runs, so those are not a property of the
+    build."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    docs = synth_documents(spark, N_DOCS)
+    cat = synth_media_catalog(spark)
+    rs = corpus_ruleset()
+    builder = threading.get_ident()
+    sent = [0]
+    real = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == builder:
+            sent[0] += 1
+        return real(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        validate_run(spark, docs, rs, media_catalog=cat)
+    finally:
+        ClientServerConnection.send_command = real
+    assert 0 < sent[0] <= 2600, sent[0]
+
+
+def test_analysis_error_raises_without_call_site_capture(spark):
+    """With call-site capture off (session default), a malformed plugin
+    frame still fails analysis, naming the missing column."""
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    bad = spark.createDataFrame(
+        [("doc-000001", "/", "error", "no rule id")],
+        "doc_id string, span_path string, severity string, message string",
+    )
+    with pytest.raises(AnalysisException, match="rule_id"):
+        validate_run(
+            spark, synth_documents(spark, 50), corpus_ruleset(), extra_violations=[bad]
+        )
 
 
 def test_determinism_across_parallelism(spark):

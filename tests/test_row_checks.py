@@ -211,6 +211,13 @@ def test_unknown_kind_raises():
         compile_rule(Rule("x", "/v", "no-such-keyword")).violations()
 
 
+def test_compile_rule_rejects_span_rules():
+    """Span rules have one compile path, the fused per-spans-column
+    transform; compile_rule points there instead of compiling them."""
+    with pytest.raises(ValueError, match="with_violations"):
+        compile_rule(Rule("x", "/spans/*/kind", "required"))
+
+
 # ----------------------------------------------------------------------
 # dynamic-JSON object keywords over a map<string,string> column
 # ----------------------------------------------------------------------
